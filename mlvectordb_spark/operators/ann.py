@@ -18,6 +18,11 @@ Both implement the same protocol as the exact path (build → search), and
 the exact brute-force KNN (operators/knn.py) stays the correctness
 reference: `recall_at_k` measures any approximate index against it
 (SURVEY.md §7 Phase 5 verification).
+
+Every family (these, IVFPQIndex, and graph_ann.GraphANNIndex) rolls
+forward from the store's CDC feed through ONE kernel, `apply_cdc`, whose
+`PendingTail` policy bounds the maintained frames' lineage; a family
+supplies only its encode step, the frames it maintains and its drift rule.
 """
 
 from __future__ import annotations
@@ -54,7 +59,7 @@ def staged_index_save(path: str, write_into) -> None:
     plans at the committed files afterwards (the swap replaced the files
     the old plans reference).
 
-    Crash-debris handling (r8 verdict #5): a crash mid-`write_into`
+    Crash-debris handling: a crash mid-`write_into`
     strands `<path>.staging-<uuid>`; a crash between the two renames
     strands the previous save in `<path>.old-<uuid>` with nothing at
     `path`. On entry: if `path` is missing but `.old-*` siblings
@@ -127,7 +132,7 @@ def staged_index_save(path: str, write_into) -> None:
                 # and the rollback source is gone. `path` holding a
                 # committed layout means the store is healed — degrade to
                 # a clean "save lost the race" error instead of a
-                # confusing secondary rename failure (r10 ADVICE).
+                # confusing secondary rename failure.
                 if _os.path.isdir(path):
                     raise OSError(
                         f"save lost a recovery race: {path} was restored "
@@ -188,6 +193,98 @@ def recover_index_path(path: str, grace_sec: float = 10.0) -> bool:
         _time.sleep(min(0.2, grace_sec))
 
 
+def save_sidecars(
+    spark, stage: str, vec_col: str, ivf=None, curve: dict | None = None
+) -> None:
+    """The driver-scale state a family's save() writes next to its data:
+    `meta` (the build-time vector column, which a reloaded index's
+    maintenance and search paths default to); with `ivf` (an IVFIndex or
+    IVF+PQ's IVF layer) also the drift counters, `centroids` and the
+    pruning bounds `cluster_stats`, so a reload keeps is_rebuild_required()
+    live and pays no corpus scan; and the measured `recall_curve`."""
+
+    def put(name: str, rows: list, schema: str) -> None:
+        local_rows_df(spark, rows, schema).write.mode("overwrite").parquet(
+            f"{stage}/{name}"
+        )
+
+    if ivf is None:
+        put("meta", [(vec_col,)], "vec_col string")
+    else:
+        radii, counts = ivf.cluster_stats()
+        put(
+            "meta",
+            [(int(ivf._built_count), int(ivf._added_count), vec_col)],
+            "built_count long, added_count long, vec_col string",
+        )
+        put(
+            "centroids",
+            [(i, [float(x) for x in c]) for i, c in enumerate(ivf.centroids)],
+            "cluster_id int, centroid array<double>",
+        )
+        put(
+            "cluster_stats",
+            [(i, float(radii[i]), int(counts[i])) for i in range(len(radii))],
+            "cluster_id int, radius double, n long",
+        )
+    if curve:
+        put(
+            "recall_curve",
+            [(int(p), float(r)) for p, r in sorted(curve.items())],
+            "nprobe int, recall double",
+        )
+
+
+def load_sidecars(spark, path: str, ivf=None) -> tuple[str | None, dict | None]:
+    """Read what save_sidecars wrote; returns (vec_col, recall_curve).
+    With `ivf` (its `indexed` already set) the centroids, pruning bounds
+    and drift counters are restored onto it in place. Layouts written
+    before a sidecar existed still load: no `meta` → vec_col None (the
+    caller's default) and drift restarts at the index's row count; no
+    `cluster_stats` → bounds recompute lazily; no `recall_curve` → None."""
+
+    def read(name: str):
+        try:
+            return spark.read.parquet(f"{path}/{name}").collect()
+        except Exception:  # noqa: BLE001 — sidecar absent in an older layout
+            return None
+
+    meta = (read("meta") or [None])[0]
+    fields = meta.__fields__ if meta is not None else []
+    if ivf is not None:
+        cents = (
+            spark.read.parquet(f"{path}/centroids")
+            .orderBy("cluster_id")
+            .collect()
+        )
+        ivf.n_clusters = len(cents)
+        ivf.centroids = np.array([r.centroid for r in cents])
+        stats = read("cluster_stats")
+        if stats is not None:
+            ivf._radii = np.zeros(len(cents), dtype=np.float64)
+            ivf._counts = np.zeros(len(cents), dtype=np.int64)
+            for r in stats:
+                ivf._radii[int(r.cluster_id)] = float(r.radius)
+                ivf._counts[int(r.cluster_id)] = int(r.n)
+        if "built_count" in fields:
+            ivf._built_count = int(meta.built_count)
+            ivf._added_count = int(meta.added_count)
+        else:
+            ivf._built_count = (
+                int(ivf._counts.sum())
+                if ivf._counts is not None
+                else ivf.indexed.count()
+            )
+            ivf._added_count = 0
+    vec_col = str(meta.vec_col) if "vec_col" in fields and meta.vec_col else None
+    if ivf is not None and vec_col:
+        ivf._vec_col = vec_col
+    curve = read("recall_curve")
+    return vec_col, (
+        {int(r.nprobe): float(r.recall) for r in curve} if curve else None
+    )
+
+
 def per_key_topk(
     df: DataFrame, key_col: str, k: int, order_cols: list, salt_on: str
 ) -> DataFrame:
@@ -218,6 +315,121 @@ def per_key_topk(
     )
 
 
+# retire anti-join strategy bound: a steady-state CDC feed (bounded by the
+# sync interval) broadcasts its id set; a catch-up/resync feed above this
+# row count must not be forced through a broadcast (Spark's 8 GB /
+# 512M-row broadcast cap) — it falls back to the AQE-sized anti-join.
+BROADCAST_FEED_ROWS = 2_000_000
+
+
+def latest_events(changes: DataFrame, id_col: str) -> DataFrame:
+    """Latest event per id of a CDC feed (`VectorStore.changes_since`
+    shape: `change_type` in {'upsert','delete'}, monotone `write_version`)
+    — a window over the feed, bounded by the sync interval, not the corpus."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(id_col).orderBy(F.col("write_version").desc())
+    return (
+        changes.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+class PendingTail:
+    """Lineage-collapse policy for CDC-maintained frames: every sync adds
+    one anti-join + union to their plans, so they are checkpointed after
+    8 syncs, or once the absorbed upserts reach 20% of max(1024, index
+    size) — the store's compaction economics. A resync-sized feed (every
+    live row) trips the row bound on its own sync unless it is tiny."""
+
+    MAX_SYNCS = 8
+    MAX_SHARE = 0.2
+
+    def __init__(self) -> None:
+        self.syncs = 0
+        self.rows = 0
+
+    def due(self, rows: int, size: int) -> bool:
+        """Count one sync of `rows` upserts; True means collapse now."""
+        self.syncs += 1
+        self.rows += rows
+        due = self.syncs >= self.MAX_SYNCS or self.rows >= (
+            self.MAX_SHARE * max(1024, size)
+        )
+        if due:
+            self.syncs = self.rows = 0
+        return due
+
+
+def apply_cdc(
+    index,
+    changes: DataFrame,
+    id_col: str,
+    encode,
+    drift,
+    frames: Sequence[str] = ("indexed",),
+    stat_key: str | None = None,
+) -> list:
+    """The CDC maintenance kernel every index family runs: roll `index`
+    forward from a change feed without a rebuild, at O(feed) cost.
+
+    The latest event per id survives; `encode` turns the upserts (feed
+    columns minus change_type / write_version) into the family's stored
+    shape. Encoded upserts and NULL-padded delete ids form ONE lazy
+    localCheckpoint, materialized by one stats aggregate (upsert / delete
+    counts, plus max `__cdist` per `stat_key` when the encoding carries
+    it) — which also detaches the maintained frames from the store's
+    files before compaction can rewrite them. Every frame named in
+    `frames` retires the feed's ids with one anti-join (broadcast up to
+    BROADCAST_FEED_ROWS); the LAST one also takes the upserts.
+    `drift(n_up, n_del)` applies the family's drift rule and returns the
+    index size, which sizes the `index._tail` collapse. Sets
+    `index.last_applied_upserts` and returns the upserts' stats rows."""
+    latest = latest_events(changes, id_col)
+    # same columns in both branches: they share ONE window exchange
+    ups, dels = (
+        latest.filter(F.col("change_type") == t).drop(
+            "change_type", "write_version"
+        )
+        for t in ("upsert", "delete")
+    )
+    feed = (
+        encode(ups)
+        .withColumn("__up", F.lit(True))
+        .unionByName(
+            dels.withColumn("__up", F.lit(False)), allowMissingColumns=True
+        )
+        .localCheckpoint(eager=False)
+    )
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if "__cdist" in feed.columns:
+        aggs.append(F.max("__cdist").alias("radius"))
+    keys = ["__up"] + ([stat_key] if stat_key else [])
+    stats = feed.groupBy(*keys).agg(*aggs).collect()
+    n_up = sum(int(r.n) for r in stats if r["__up"])
+    n_del = sum(int(r.n) for r in stats if not r["__up"])
+    stats = [r for r in stats if r["__up"]]
+    index.last_applied_upserts = n_up
+    ids = feed.select(id_col)
+    if n_up + n_del <= BROADCAST_FEED_ROWS:
+        ids = F.broadcast(ids)
+    rows = feed.filter(F.col("__up")).drop("__up")
+    for name in frames:
+        df = getattr(index, name)
+        if df is not None:
+            df = df.join(ids, id_col, "left_anti")
+        if name == frames[-1] and n_up:
+            df = rows if df is None else df.unionByName(rows.select(*df.columns))
+        setattr(index, name, df)
+    if index._tail.due(n_up, drift(n_up, n_del)):
+        for name in frames:
+            df = getattr(index, name)
+            if df is not None:
+                setattr(index, name, df.localCheckpoint())
+    return stats
+
+
 class IVFIndex:
     """Inverted-file index over KMeans centroids.
 
@@ -228,17 +440,6 @@ class IVFIndex:
     """
 
     REBUILD_THRESHOLD = 0.2  # reference index.py:18 — refit at 20% drift
-    # apply_changes materializes its own bounded pieces and folds the
-    # pending tail itself — the store sync must NOT re-checkpoint the
-    # whole index after every bounded batch (see _sync_namespace)
-    manages_materialization = True
-    # retire anti-join strategy bound: a steady-state CDC feed (bounded
-    # by the sync interval) broadcasts its id set; a catch-up/resync
-    # feed above this row count must NOT be forced through a broadcast
-    # (the 8 GB / 512M-row broadcast cap, r12 ADVICE medium) — it falls
-    # back to the AQE-sized anti-join, and the pending-tail fold
-    # materializes the result right after anyway.
-    BROADCAST_FEED_ROWS = 2_000_000
 
     def __init__(
         self,
@@ -273,10 +474,7 @@ class IVFIndex:
         # reloaded serving index can honor a recall target without
         # re-measuring
         self._recall_curve: dict[int, float] | None = None
-        # pending-tail CDC state (apply_changes): syncs/rows accumulated
-        # since the last full fold of the anti-join/union chain
-        self._tail_syncs = 0
-        self._tail_rows = 0
+        self._tail = PendingTail()
 
     def _fit_centroids(
         self, df: DataFrame, vec_col: str, id_col: str
@@ -361,7 +559,7 @@ class IVFIndex:
                     # distance; certified-exact pruning needs radii to be
                     # true upper bounds, and _radius_rows computes the
                     # direct form, so build-time and incremental radii now
-                    # agree numerically (r12 ADVICE).
+                    # agree numerically.
                     diff = mat - cent[cids]
                     pdf["__cdist"] = np.sqrt((diff * diff).sum(axis=1))
                 yield pdf
@@ -423,23 +621,17 @@ class IVFIndex:
         return self.indexed
 
     def add(
-        self, df_new: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
+        self, df_new: DataFrame, vec_col: str | None = None, id_col: str = "vec_id"
     ) -> DataFrame:
         """W8 incremental add: assign new vectors to their nearest EXISTING
         centroid (no refit) and append — the same Arrow-batched argmin map
-        as build()'s assignment: narrow, NO join, NO window, NO shuffle
-        (the round-2 verdict flagged the old crossJoin+window plan).
+        as build()'s assignment: narrow, NO join, NO window, NO shuffle.
         Quality drifts as data shifts away from the fitted centroids, so
         adds count toward the W9/W11 rebuild trigger (the reference tracks
         deleted/total the same way, index.py:85-89)."""
         assert self.indexed is not None and self.centroids is not None
-        assigned = self._assign(df_new.drop("cluster_id"), vec_col)
-        # one job: count the batch AND grow the cached radii over it (no
-        # full-corpus recompute on next search); counts refresh lazily
-        n_new = self._absorb_batch_stats(assigned, vec_col)
-        self.indexed = self.indexed.unionByName(assigned.select(*self.indexed.columns))
-        self._added_count += n_new
-        self._counts = None
+        vec_col = vec_col or self._vec_col
+        self._append(self._assign(df_new.drop("cluster_id"), vec_col), vec_col)
         return self.indexed
 
     def is_rebuild_required(self) -> bool:
@@ -473,109 +665,51 @@ class IVFIndex:
         id_col: str = "vec_id",
     ) -> DataFrame:
         """Roll the index forward from a CDC feed (`VectorStore.
-        changes_since` shape: `change_type` in {'upsert','delete'} plus a
-        monotone `write_version`) WITHOUT a rebuild: latest event per id
-        wins, deleted/superseded ids drop out, upserted vectors assign to
-        their nearest EXISTING centroid (no refit) — the maintenance loop
-        that keeps a serving index continuously fresh against the
-        merge-on-read store.
-
-        Scale shape: the event collapse is a window over the FEED (bounded
-        by the sync interval, not the corpus); retiring changed ids is one
-        anti-join of the indexed table against that bounded id set
-        (broadcast while the feed is provably small, AQE-sized above the
-        bound — a catch-up/resync-sized feed must not be forced through a
-        broadcast, r12 ADVICE); assignment is the same Arrow argmin map as
-        add() — narrow, no shuffle of the corpus. Upserts count toward the
-        W11 drift trigger exactly like add(); exactness of `search_exact`
-        is unaffected either way (certified pruning holds on any
-        assignment). The feed must carry every non-derived column of the
-        indexed table (the union is by name)."""
-        from pyspark.sql.window import Window as _W
-
+        changes_since` shape) WITHOUT a rebuild, through `apply_cdc`:
+        upserts assign to their nearest EXISTING centroid (add()'s Arrow
+        argmin map — no refit, no shuffle of the corpus), and the same
+        matmul's `__cdist` grows the cached radii in the kernel's one stats
+        job. Upserts count toward the W11 drift trigger like add();
+        `search_exact` stays exact on any assignment. The feed must carry
+        every non-derived column of the indexed table (union by name)."""
         vec_col = vec_col or self._vec_col
         assert self.indexed is not None and self.centroids is not None
-        w = _W.partitionBy(id_col).orderBy(F.col("write_version").desc())
-        cols = self.indexed.columns
-        latest = (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        stats = apply_cdc(
+            self,
+            changes,
+            id_col,
+            lambda ups: self._assign(
+                ups.drop("cluster_id"), vec_col, with_dist=True
+            ),
+            self._count_drift,
+            stat_key="cluster_id",
         )
-        ups = latest.filter(F.col("change_type") == "upsert").drop(
-            "change_type", "write_version", "cluster_id"
-        )
-        # ONE materialization job for the whole sync (guide §1.2): the
-        # assigned upserts and the delete events union into a single
-        # LAZY localCheckpoint whose first (and only) materializing
-        # action is the stats aggregate below — it yields the radius
-        # growth (from __cdist, emitted by the same Arrow matmul as the
-        # assignment — one boundary crossing, guide §4), the upsert
-        # count (W11 drift), AND the total feed size (the broadcast
-        # bound). The r12 shape paid three jobs here: checkpoint(latest)
-        # + checkpoint(assigned) + stats collect. Materializing detaches
-        # the plan from the store's parquet/tombstone files before
-        # compaction or tombstone retirement can rewrite them; deletes
-        # are discriminated by cluster_id NULL (the assignment map stamps
-        # every upsert with a real cluster).
-        assigned = self._assign(ups, vec_col, with_dist=True)
-        dels = (
-            latest.filter(F.col("change_type") == "delete")
-            .drop("change_type", "write_version", "cluster_id")
-            .withColumn("cluster_id", F.lit(None).cast("int"))
-            .withColumn("__cdist", F.lit(None).cast("double"))
-        )
-        feed = assigned.unionByName(dels).localCheckpoint(eager=False)
-        stats_rows = (
-            feed.groupBy("cluster_id")
-            .agg(F.max("__cdist").alias("radius"), F.count("*").alias("n"))
-            .collect()
-        )
-        n_new = 0
-        n_del = 0
-        for r in stats_rows:
-            if r.cluster_id is None:
-                n_del += int(r.n)
-                continue
-            n_new += int(r.n)
+        self._grow_radii(stats)
+        return self.indexed
+
+    def _count_drift(self, n_up: int, n_del: int) -> int:
+        """apply_cdc drift rule: upserts drift away from the fitted
+        centroids, deletes do not. Returns the index size."""
+        self._added_count += n_up
+        self._counts = None
+        return self._built_count + self._added_count
+
+    def _grow_radii(self, rows) -> int:
+        """Grow the cached radii over per-cluster (radius, n) rows of a
+        batch; returns its row count. Deletes only shrink true radii, so
+        grow-only cached radii stay valid UPPER bounds and certified
+        pruning stays exact."""
+        n = 0
+        for r in rows:
+            j = int(r.cluster_id)
+            n += int(r.n)
             if (
                 self._radii is not None
                 and r.radius is not None
-                and float(r.radius) > self._radii[int(r.cluster_id)]
+                and float(r.radius) > self._radii[j]
             ):
-                self._radii[int(r.cluster_id)] = float(r.radius)
-        # consumed by resync_index_from_snapshot to size the fresh drift
-        # baseline without re-counting the snapshot
-        self.last_applied_upserts = n_new
-        # PENDING-TAIL composition (the graph family's fold pattern):
-        # retire this feed's ids with one bounded anti-join and union the
-        # checkpointed batch — per-sync cost is O(feed), not O(index).
-        # The old shape (store sync re-checkpointing the WHOLE index
-        # after every bounded batch) paid a full index materialization
-        # per sync cycle — at continuous-ingest scale that is an
-        # O(corpus) write amplification per micro-batch.
-        ids = feed.select(id_col)
-        if n_new + n_del <= self.BROADCAST_FEED_ROWS:
-            ids = F.broadcast(ids)
-        self.indexed = self.indexed.join(ids, id_col, "left_anti").unionByName(
-            feed.filter(F.col("cluster_id").isNotNull()).select(*cols)
-        )
-        self._added_count += n_new
-        self._counts = None
-        # FOLD: collapse the anti-join/union chain when the accumulated
-        # tail is no longer small next to the index (the same 20%
-        # economics as the store's compaction trigger), or when plan
-        # depth alone starts to cost analysis time. A resync-sized feed
-        # trips the row bound immediately, so catch-up still ends in one
-        # fully-materialized index.
-        self._tail_syncs += 1
-        self._tail_rows += n_new
-        base = max(1024, self._built_count + self._added_count)
-        if self._tail_syncs >= 8 or self._tail_rows >= 0.2 * base:
-            self.indexed = self.indexed.localCheckpoint()
-            self._tail_syncs = 0
-            self._tail_rows = 0
-        return self.indexed
+                self._radii[j] = float(r.radius)
+        return n
 
     def _radius_rows(self, df: DataFrame, vec_col: str):
         """Per-cluster (max member-to-centroid distance, count) over `df` —
@@ -607,38 +741,22 @@ class IVFIndex:
             .collect()
         )
 
-    def _absorb_batch_stats(self, batch: DataFrame, vec_col: str) -> int:
-        """ONE job over a BOUNDED assigned batch (add / apply_changes
-        upserts) that both counts it (the W11 drift increment) and grows
-        the cached radii: a new member can extend its cluster's radius; a
-        delete can only shrink the true radius, so the cached value stays
-        a valid UPPER bound and certified pruning stays exact (just
-        marginally less tight until the next full stats pass). This keeps
-        CDC maintenance from forcing a full-corpus radius recompute on
-        the next search — at continuous-ingest scale the stats pass would
-        otherwise re-read the whole corpus every sync cycle (1M×64d
-        measurement: ~12 s per post-churn search repaying the pass,
-        tools/scale_probe.py). Returns the batch row count. When no radii
-        are cached, falls back to a bare count (no vector decode)."""
-        if self._radii is None:
-            return batch.count()
-        if "__cdist" in batch.columns:
-            # the assignment matmul already emitted the member→centroid
-            # distance: radius growth is a plain JVM aggregate, no second
-            # Python pass over the batch (see _assign with_dist)
-            rows = (
-                batch.groupBy("cluster_id")
-                .agg(F.max("__cdist").alias("radius"), F.count("*").alias("n"))
-                .collect()
-            )
-        else:
-            rows = self._radius_rows(batch, vec_col)
-        n = 0
-        for r in rows:
-            j = int(r.cluster_id)
-            n += int(r.n)
-            if float(r.radius) > self._radii[j]:
-                self._radii[j] = float(r.radius)
+    def _append(self, batch: DataFrame, vec_col: str) -> int:
+        """Union an assigned BOUNDED batch (add) into the index. ONE job
+        counts it (W11 drift) and grows the cached radii, so adds never
+        force a full-corpus radius recompute on the next search (1M×64d:
+        ~12 s per post-churn search, tools/scale_probe.py). Without cached
+        radii it is a bare count. Returns the batch row count."""
+        n = (
+            batch.count()
+            if self._radii is None
+            else self._grow_radii(self._radius_rows(batch, vec_col))
+        )
+        self.indexed = self.indexed.unionByName(
+            batch.select(*self.indexed.columns)
+        )
+        self._added_count += n
+        self._counts = None
         return n
 
     def cluster_stats(self, vec_col: str | None = None) -> tuple[np.ndarray, np.ndarray]:
@@ -743,7 +861,7 @@ class IVFIndex:
         self,
         qvec,
         k: int,
-        vec_col: str = "embedding",
+        vec_col: str | None = None,
         id_col: str = "vec_id",
         pre_filter=None,
     ) -> DataFrame:
@@ -759,6 +877,7 @@ class IVFIndex:
         predicate both restricts the scan AND re-derives the per-cluster
         coverage counts, so tau certifies the kth MATCHING neighbour and
         pruning stays exact under filtering."""
+        vec_col = vec_col or self._vec_col
         radii, counts = self.cluster_stats(vec_col)
         if pre_filter is not None:
             counts = self._filtered_counts(pre_filter)
@@ -781,7 +900,7 @@ class IVFIndex:
         k: int,
         query_vec: str = "embedding",
         query_id: str = "query_id",
-        vec_col: str = "embedding",
+        vec_col: str | None = None,
         id_col: str = "vec_id",
         pre_filter=None,
         score_decimals: int = 4,
@@ -800,49 +919,13 @@ class IVFIndex:
         union of probed clusters (partition pruning on the saved layout)
         and each candidate row joins only the queries that probe its
         cluster."""
-        from mlvectordb_spark.functions.vector import metric_expr
-
-        assert self.indexed is not None
-        spark = self.indexed.sparkSession
+        vec_col = vec_col or self._vec_col
         radii, counts = self.cluster_stats(vec_col)
         if pre_filter is not None:
             counts = self._filtered_counts(pre_filter)
-        qrows = queries.select(query_id, query_vec).collect()
-        pairs = [
-            (r[query_id], int(c))
-            for r in qrows
-            for c in self._certified_probes(
-                np.asarray(r[query_vec], dtype=np.float64), k, radii, counts
-            )
-        ]
-        probe_df = local_rows_df(spark, 
-            pairs, f"{query_id} long, cluster_id int"
-        )
-        probed_clusters = sorted({c for _, c in pairs})
-        cand = self.indexed.filter(F.col("cluster_id").isin(probed_clusters))
-        if pre_filter is not None:
-            cand = cand.filter(pre_filter)
-        qv = queries.select(
-            F.col(query_id), F.col(query_vec).alias("__qvec")
-        )
-        scored = (
-            cand.join(F.broadcast(probe_df), "cluster_id")
-            .join(F.broadcast(qv), query_id)
-            .select(
-                F.col(query_id),
-                F.col(id_col),
-                F.round(
-                    metric_expr(F.col(vec_col), F.col("__qvec"), "l2"),
-                    score_decimals,
-                ).alias("score"),
-            )
-        )
-        return per_key_topk(
-            scored,
-            query_id,
-            k,
-            [F.col("score").asc(), F.col(id_col).asc()],
-            salt_on=id_col,
+        return self._probe_join(
+            queries, k, lambda q: self._certified_probes(q, k, radii, counts),
+            query_vec, query_id, vec_col, id_col, pre_filter, score_decimals,
         )
 
     def knn_join(
@@ -852,7 +935,7 @@ class IVFIndex:
         nprobe: int = 4,
         query_vec: str = "embedding",
         query_id: str = "query_id",
-        vec_col: str = "embedding",
+        vec_col: str | None = None,
         id_col: str = "vec_id",
         pre_filter=None,
         score_decimals: int = 4,
@@ -869,20 +952,32 @@ class IVFIndex:
         calibration curve (measure_recall_curve / nprobe_for_recall)
         prices the dial, so target-recall BATCH serving rides this via
         `VectorStore.find_similar_batch(mode="approx", target_recall=)`."""
+        return self._probe_join(
+            queries, k, lambda q: self._probe_clusters(q, nprobe),
+            query_vec, query_id, vec_col or self._vec_col, id_col,
+            pre_filter, score_decimals,
+        )
+
+    def _probe_join(
+        self, queries, k, probes, query_vec, query_id, vec_col, id_col,
+        pre_filter, score_decimals,
+    ) -> DataFrame:
+        """The batch serving shape of knn_join_exact / knn_join: each
+        query's clusters (`probes(q)`) union into ONE pruned scan; a
+        broadcast (query_id, cluster_id) pair table restricts each query
+        to ITS probes; per-query top-k is a window over (rounded score,
+        id)."""
         from mlvectordb_spark.functions.vector import metric_expr
 
         assert self.indexed is not None
-        spark = self.indexed.sparkSession
         qrows = queries.select(query_id, query_vec).collect()
         pairs = [
             (r[query_id], int(c))
             for r in qrows
-            for c in self._probe_clusters(
-                np.asarray(r[query_vec], dtype=np.float64), nprobe
-            )
+            for c in probes(np.asarray(r[query_vec], dtype=np.float64))
         ]
-        probe_df = local_rows_df(spark, 
-            pairs, f"{query_id} long, cluster_id int"
+        probe_df = local_rows_df(
+            self.indexed.sparkSession, pairs, f"{query_id} long, cluster_id int"
         )
         cand = self.indexed.filter(
             F.col("cluster_id").isin(sorted({c for _, c in pairs}))
@@ -920,108 +1015,41 @@ class IVFIndex:
         """Q23 (declared save_index, README:239-241): persist the derived
         index — the clustered DataFrame partitioned BY cluster_id (so a
         probe becomes physical partition pruning on reload) plus the
-        centroid table. Staged atomic-swap (staged_index_save): saving a
-        maintained index back over its own load path is safe and a
-        crashed save never destroys the previous one."""
+        driver-scale sidecars (`save_sidecars`). Staged atomic-swap
+        (staged_index_save): saving a maintained index back over its own
+        load path is safe and a crashed save never destroys the previous
+        one."""
+        self._save(path, "indexed", self._recall_curve)
+
+    def _save(self, path: str, data_dir: str, curve, extra=None) -> None:
+        """Staged save of the clustered layout shared with IVF+PQ: data
+        under `data_dir` partitioned by cluster_id, the sidecars, and
+        `extra(stage)`; then `indexed` re-points at the committed files."""
         assert self.indexed is not None and self.centroids is not None
         spark = self.indexed.sparkSession
-        radii, counts = self.cluster_stats()
 
         def write_into(stage: str) -> None:
             (
                 self.indexed.write.mode("overwrite")
                 .partitionBy("cluster_id")
-                .parquet(f"{stage}/indexed")
+                .parquet(f"{stage}/{data_dir}")
             )
-            cent_rows = [
-                (i, [float(x) for x in c])
-                for i, c in enumerate(self.centroids)
-            ]
-            local_rows_df(spark, 
-                cent_rows, "cluster_id int, centroid array<double>"
-            ).write.mode("overwrite").parquet(f"{stage}/centroids")
-            # drift counters AND the build-time vector column travel with
-            # the index — otherwise a reloaded index silently disables the
-            # W11 rebuild trigger (round-2 verdict), and maintenance paths
-            # that default to self._vec_col (refresh_stats / apply_changes
-            # / save) would look for the ctor-default 'embedding' column
-            # in an index built over e.g. the store's 'values' (round-6
-            # ADVICE)
-            local_rows_df(spark, 
-                [(
-                    int(self._built_count),
-                    int(self._added_count),
-                    self._vec_col,
-                )],
-                "built_count long, added_count long, vec_col string",
-            ).write.mode("overwrite").parquet(f"{stage}/meta")
-            # exact-search pruning bounds travel with the index (k rows) —
-            # a reloaded index must not pay a corpus scan to re-derive them
-            local_rows_df(spark, 
-                [
-                    (i, float(radii[i]), int(counts[i]))
-                    for i in range(len(radii))
-                ],
-                "cluster_id int, radius double, n long",
-            ).write.mode("overwrite").parquet(f"{stage}/cluster_stats")
-            if self._recall_curve:
-                # measured nprobe→recall points travel with the index: a
-                # reloaded serving index honors target_recall without
-                # paying the calibration jobs again
-                local_rows_df(spark, 
-                    [
-                        (int(p), float(r))
-                        for p, r in sorted(self._recall_curve.items())
-                    ],
-                    "nprobe int, recall double",
-                ).write.mode("overwrite").parquet(f"{stage}/recall_curve")
+            save_sidecars(spark, stage, self._vec_col, ivf=self, curve=curve)
+            if extra is not None:
+                extra(stage)
 
         staged_index_save(path, write_into)
-        self.indexed = spark.read.parquet(f"{path}/indexed")
+        self.indexed = spark.read.parquet(f"{path}/{data_dir}")
 
     @classmethod
     def load(cls, spark, path: str) -> "IVFIndex":
         """Q23 load_index: restore centroids + clustered data + drift
-        counters (falling back to a count for indexes saved by older
-        writers, so is_rebuild_required() stays live across persistence)."""
+        counters + pruning bounds + recall curve (`load_sidecars`, which
+        tolerates layouts saved before a sidecar existed)."""
         recover_index_path(path)
-        cents = (
-            spark.read.parquet(f"{path}/centroids")
-            .orderBy("cluster_id")
-            .collect()
-        )
-        idx = cls(n_clusters=len(cents))
-        idx.centroids = np.array([r.centroid for r in cents])
+        idx = cls()
         idx.indexed = spark.read.parquet(f"{path}/indexed")
-        try:
-            meta = spark.read.parquet(f"{path}/meta").head()
-            idx._built_count = int(meta.built_count)
-            idx._added_count = int(meta.added_count)
-            # vec_col joined the meta layout in round 7; older layouts fall
-            # back to the ctor default ('embedding')
-            if "vec_col" in meta.__fields__ and meta.vec_col:
-                idx._vec_col = str(meta.vec_col)
-        except Exception:  # noqa: BLE001 — pre-meta index layout
-            idx._built_count = idx.indexed.count()
-            idx._added_count = 0
-        try:
-            srows = spark.read.parquet(f"{path}/cluster_stats").collect()
-            radii = np.zeros(len(cents), dtype=np.float64)
-            counts = np.zeros(len(cents), dtype=np.int64)
-            for r in srows:
-                radii[int(r.cluster_id)] = float(r.radius)
-                counts[int(r.cluster_id)] = int(r.n)
-            idx._radii, idx._counts = radii, counts
-        except Exception:  # noqa: BLE001 — pre-stats layout; lazy recompute
-            pass
-        try:
-            crows = spark.read.parquet(f"{path}/recall_curve").collect()
-            if crows:
-                idx._recall_curve = {
-                    int(r.nprobe): float(r.recall) for r in crows
-                }
-        except Exception:  # noqa: BLE001 — curve never measured/saved
-            pass
+        idx._recall_curve = load_sidecars(spark, path, ivf=idx)[1]
         return idx
 
     def search(
@@ -1029,7 +1057,7 @@ class IVFIndex:
         qvec,
         k: int,
         nprobe: int = 4,
-        vec_col: str = "embedding",
+        vec_col: str | None = None,
         id_col: str = "vec_id",
         metric: str = "l2",
     ) -> DataFrame:
@@ -1038,7 +1066,10 @@ class IVFIndex:
         assert self.indexed is not None, "build() first"
         probes = self._probe_clusters(qvec, nprobe)
         candidates = self.indexed.filter(F.col("cluster_id").isin(probes))
-        return knn(candidates, qvec, k, vec_col=vec_col, id_col=id_col, metric=metric)
+        return knn(
+            candidates, qvec, k, vec_col=vec_col or self._vec_col,
+            id_col=id_col, metric=metric,
+        )
 
     def measure_recall_curve(
         self,
@@ -1148,6 +1179,13 @@ def _nprobe_for_recall(
     return n_clusters
 
 
+def _hash_bucket(i: int):
+    """Bucket id of hash table i, read from the MLlib `__hashes` vectors."""
+    from pyspark.ml.functions import vector_to_array
+
+    return vector_to_array(F.col("__hashes")[i])[0].cast("long")
+
+
 class LSHIndex:
     """BucketedRandomProjectionLSH wrapper (euclidean LSH)."""
 
@@ -1159,10 +1197,13 @@ class LSHIndex:
         self.seed = seed
         self.model = None
         self.indexed: DataFrame | None = None
+        self._vec_col = "embedding"
+        self._tail = PendingTail()
 
     def build(
         self, df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
     ) -> DataFrame:
+        self._vec_col = vec_col
         feat = df.withColumn("__features", array_to_vector(F.col(vec_col)))
         lsh = BucketedRandomProjectionLSH(
             inputCol="__features",
@@ -1201,6 +1242,7 @@ class LSHIndex:
             self.indexed.select(*keep, *bucket_cols).write.mode(
                 "overwrite"
             ).parquet(f"{stage}/data")
+            save_sidecars(spark, stage, self._vec_col)
 
         staged_index_save(path, write_into)
         self.indexed = spark.read.parquet(f"{path}/data")
@@ -1211,7 +1253,9 @@ class LSHIndex:
     ) -> "LSHIndex":
         """Q23: restore the model and the bucket-materialized data. The
         b0..bN columns serve search_exact directly (pushed filters);
-        approx paths re-hash on demand (`_with_features`)."""
+        approx paths re-hash on demand (`_with_features`). The build-time
+        vector column comes from the saved meta; `vec_col` names it only
+        for layouts saved before the meta existed."""
         from pyspark.ml.feature import BucketedRandomProjectionLSHModel
 
         recover_index_path(path)
@@ -1220,71 +1264,60 @@ class LSHIndex:
         idx.bucket_length = float(idx.model.getBucketLength())
         idx.num_hash_tables = int(idx.model.getNumHashTables())
         idx.indexed = spark.read.parquet(f"{path}/data")
+        idx._vec_col = load_sidecars(spark, path)[0] or vec_col
         return idx
 
     def apply_changes(
-        self, changes: DataFrame, vec_col: str = "embedding",
+        self, changes: DataFrame, vec_col: str | None = None,
         id_col: str = "vec_id",
     ) -> DataFrame:
-        """CDC maintenance for the LSH family (the IVFIndex.apply_changes
-        contract): latest event per id wins over the bounded feed, changed
-        ids retire via one anti-join, upserts re-hash through the FITTED
-        model. Unlike IVF, LSH maintenance cannot drift at all: the random
-        hyperplanes are data-independent, so hashing new rows with the
-        saved model is exactly what a fresh build would compute — no
-        rebuild trigger needed. Works on both index shapes (built:
-        __hashes/__features present; loaded: materialized b0..bN bucket
-        columns)."""
-        from pyspark.sql.window import Window as _W
-
+        """CDC maintenance through `apply_cdc`: upserts re-hash through
+        the FITTED model, in whichever shape the index holds (`_hash`).
+        LSH cannot drift — the random hyperplanes are data-independent,
+        so hashing new rows with the saved model is exactly what a fresh
+        build would compute; the tail collapses on its own bounds."""
+        vec_col = vec_col or self._vec_col
         assert self.model is not None and self.indexed is not None
-        w = _W.partitionBy(id_col).orderBy(F.col("write_version").desc())
-        latest = (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        survivors = self.indexed.join(
-            latest.select(id_col), id_col, "left_anti"
-        )
-        ups = latest.filter(F.col("change_type") == "upsert").drop(
-            "change_type", "write_version"
-        )
-        hashed = self.model.transform(
-            ups.withColumn("__features", array_to_vector(F.col(vec_col)))
-        )
-        if "__hashes" not in self.indexed.columns:
-            # bucket-materialized shape: extract b{i} from the NEW rows'
-            # hash vectors (self._bucket_col keys off self.indexed and
-            # would wrongly reference the not-yet-existing b{i} here)
-            from pyspark.ml.functions import vector_to_array
-
-            hashed = hashed.select(
-                *ups.columns,
-                *[
-                    vector_to_array(F.col("__hashes")[i])[0]
-                    .cast("long")
-                    .alias(f"b{i}")
-                    for i in range(self.num_hash_tables)
-                ],
-            )
-        self.indexed = survivors.unionByName(
-            hashed.select(*survivors.columns)
+        apply_cdc(
+            self,
+            changes,
+            id_col,
+            lambda ups: self._hash(ups, vec_col),
+            lambda n_up, n_del: 0,
         )
         return self.indexed
 
-    def _with_features(self, vec_col: str = "embedding") -> DataFrame:
+    def _transform(self, df: DataFrame, vec_col: str | None = None) -> DataFrame:
+        """`df` plus the fitted model's MLlib __features/__hashes columns."""
+        return self.model.transform(
+            df.withColumn(
+                "__features", array_to_vector(F.col(vec_col or self._vec_col))
+            )
+        )
+
+    def _hash(self, df: DataFrame, vec_col: str) -> DataFrame:
+        """`df` hashed through the fitted model, in the indexed frame's
+        shape: MLlib __features/__hashes for a built index, b{i} bucket
+        columns for a bucket-materialized one."""
+        hashed = self._transform(df, vec_col)
+        if "__hashes" in self.indexed.columns:
+            return hashed
+        return hashed.select(
+            *df.columns,
+            *[
+                _hash_bucket(i).alias(f"b{i}")
+                for i in range(self.num_hash_tables)
+            ],
+        )
+
+    def _with_features(self, vec_col: str | None = None) -> DataFrame:
         """self.indexed with the MLlib feature/hash columns present —
         computed on demand for the approx paths when the index came from
         a bucket-materialized save."""
         assert self.model is not None and self.indexed is not None
         if "__hashes" in self.indexed.columns:
             return self.indexed
-        return self.model.transform(
-            self.indexed.withColumn(
-                "__features", array_to_vector(F.col(vec_col))
-            )
-        )
+        return self._transform(self.indexed, vec_col)
 
     def search(self, qvec, k: int, id_col: str = "vec_id") -> DataFrame:
         """approxNearestNeighbors: returns (id, distCol) for ~k candidates."""
@@ -1324,15 +1357,13 @@ class LSHIndex:
         assert self.indexed is not None
         if f"b{i}" in self.indexed.columns:
             return F.col(f"b{i}").cast("long")
-        from pyspark.ml.functions import vector_to_array
-
-        return vector_to_array(F.col("__hashes")[i])[0].cast("long")
+        return _hash_bucket(i)
 
     def search_exact(
         self,
         qvec,
         k: int,
-        vec_col: str = "embedding",
+        vec_col: str | None = None,
         id_col: str = "vec_id",
         score_decimals: int = 4,
     ) -> DataFrame:
@@ -1358,6 +1389,7 @@ class LSHIndex:
         fewer than k rows the rescore degrades to a full scan — never to a
         wrong answer."""
         assert self.model is not None and self.indexed is not None
+        vec_col = vec_col or self._vec_col
         qb = self.query_buckets(qvec)
         same_any = None
         for i, b in enumerate(qb):
@@ -1391,19 +1423,13 @@ class LSHIndex:
 
     def similarity_join(
         self, other: DataFrame | None = None, threshold: float = 1.0,
-        vec_col: str = "embedding",
+        vec_col: str | None = None,
     ) -> DataFrame:
         """approxSimilarityJoin — the LSH-bucketed near-dup path: candidate
         pairs within a euclidean threshold without a quadratic cross join."""
         assert self.model is not None and self.indexed is not None
         left = self._with_features(vec_col)
-        right = (
-            left
-            if other is None
-            else self.model.transform(
-                other.withColumn("__features", array_to_vector(F.col(vec_col)))
-            )
-        )
+        right = left if other is None else self._transform(other, vec_col)
         return self.model.approxSimilarityJoin(
             left, right, threshold, distCol="dist"
         )
@@ -1430,12 +1456,6 @@ class IVFPQIndex:
     residual encoding would shrink e and the pool, not change answers).
     Driver state: k centroids + k radii + m·k_sub sub-centroids."""
 
-    # apply_changes materializes its own bounded pieces and folds the
-    # pending tail itself (the IVFIndex contract) — the store sync must
-    # not re-checkpoint the whole encoded table after every bounded
-    # batch (r12 verdict, next-round #5)
-    manages_materialization = True
-
     def __init__(
         self,
         n_clusters: int = 16,
@@ -1450,9 +1470,7 @@ class IVFPQIndex:
         self.encoded: DataFrame | None = None
         # measured nprobe → recall@k (same contract as IVFIndex)
         self._recall_curve: dict[int, float] | None = None
-        # pending-tail CDC state (apply_changes, the IVFIndex fold)
-        self._tail_syncs = 0
-        self._tail_rows = 0
+        self._tail = PendingTail()
 
     @property
     def n_clusters(self) -> int:
@@ -1470,31 +1488,20 @@ class IVFPQIndex:
         return self.encoded
 
     def add(
-        self, df_new: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
+        self, df_new: DataFrame, vec_col: str | None = None, id_col: str = "vec_id"
     ) -> DataFrame:
         """W8 incremental add through the composed layout: assign new
-        vectors to their nearest EXISTING centroid (IVF's no-shuffle Arrow
-        argmin — no refit) and encode them with the EXISTING codebooks
-        (PQ's Arrow map). Neither layer's certification degrades: cluster
-        radii are invalidated and recomputed lazily (a new member can
-        extend one), and the per-vector reconstruction error is computed
-        fresh for each added vector, so exactness is unconditional — only
-        PRUNING quality drifts as data shifts away from the fitted
-        centroids/codebooks, which is what the IVF drift counter tracks
-        toward the W11 rebuild trigger."""
-        assigned = self.ivf._assign(df_new.drop("cluster_id"), vec_col)
-        encoded_new = self.pq.encode(assigned, vec_col=vec_col)
-        # one job: count + grow-only radius update over the bounded batch
-        n_new = self.ivf._absorb_batch_stats(encoded_new, vec_col)
-        self.last_applied_upserts = n_new
+        vectors to their nearest EXISTING centroid and encode them with the
+        EXISTING codebooks (no refit). Radii grow over the batch and each
+        vector's reconstruction error is fresh, so exactness is
+        unconditional — only PRUNING quality drifts, which the IVF drift
+        counter tracks toward the W11 rebuild trigger."""
         assert self.encoded is not None
-        self.encoded = self.encoded.unionByName(
-            encoded_new.select(*self.encoded.columns)
-        )
-        self.ivf.indexed = self.encoded
-        self.pq.encoded = self.encoded
-        self.ivf._added_count += n_new
-        self.ivf._counts = None
+        vec_col = vec_col or self.ivf._vec_col
+        assigned = self.ivf._assign(df_new.drop("cluster_id"), vec_col)
+        # the IVF layer's indexed IS the encoded table: it unions there
+        self.ivf._append(self.pq.encode(assigned, vec_col=vec_col), vec_col)
+        self.indexed = self.ivf.indexed
         return self.encoded
 
     @property
@@ -1523,170 +1530,60 @@ class IVFPQIndex:
         self.ivf.refresh_stats(vec_col)
 
     def apply_changes(
-        self, changes: DataFrame, vec_col: str = "embedding",
+        self, changes: DataFrame, vec_col: str | None = None,
         id_col: str = "vec_id",
     ) -> DataFrame:
-        """CDC maintenance through the composed layout (the IVFIndex.
-        apply_changes contract): latest event per id wins over the bounded
-        feed, changed ids retire via one anti-join (broadcast while the
-        feed is provably small, AQE-sized above the bound), upserts
-        re-enter through the assign+encode path (existing centroids and
-        codebooks — no refit). Exactness is unconditional, as with add():
-        errors are computed fresh per re-encoded vector; only pruning
-        quality drifts, tracked by the W11 counter.
-
-        Job economics mirror IVFIndex.apply_changes: ONE lazy
-        localCheckpoint over (encoded upserts ∪ delete events) whose
-        materializing action is the stats aggregate — radius growth (from
-        the assignment matmul's __cdist), upsert count, and feed size in
-        one job — then a pending-tail composition that folds at 20% drift
-        or 8 syncs, so per-sync cost is O(feed), not O(index)."""
-        from pyspark.sql.window import Window as _W
-
+        """CDC maintenance through `apply_cdc` with IVF's drift rule and
+        radius growth: upserts re-enter through assign+encode (existing
+        centroids and codebooks, no refit) — exact as with add()."""
+        vec_col = vec_col or self.ivf._vec_col
         assert self.encoded is not None and self.ivf.centroids is not None
-        w = _W.partitionBy(id_col).orderBy(F.col("write_version").desc())
-        cols = self.encoded.columns
-        latest = (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        stats = apply_cdc(
+            self,
+            changes,
+            id_col,
+            lambda ups: self.pq.encode(
+                self.ivf._assign(ups.drop("cluster_id"), vec_col, with_dist=True),
+                vec_col,
+            ),
+            self.ivf._count_drift,
+            stat_key="cluster_id",
         )
-        ups = latest.filter(F.col("change_type") == "upsert").drop(
-            "change_type", "write_version", "cluster_id"
-        )
-        encoded_new = self.pq.encode(
-            self.ivf._assign(ups, vec_col, with_dist=True), vec_col
-        )
-        dels = (
-            latest.filter(F.col("change_type") == "delete")
-            .drop("change_type", "write_version", "cluster_id")
-            .withColumn("cluster_id", F.lit(None).cast("int"))
-            .withColumn("__cdist", F.lit(None).cast("double"))
-            .withColumn(
-                "pq_codes", F.lit(None).cast("array<int>")
-            )
-            .withColumn("pq_err", F.lit(None).cast("double"))
-        )
-        feed = encoded_new.unionByName(dels).localCheckpoint(eager=False)
-        stats_rows = (
-            feed.groupBy("cluster_id")
-            .agg(F.max("__cdist").alias("radius"), F.count("*").alias("n"))
-            .collect()
-        )
-        n_new = 0
-        n_del = 0
-        for r in stats_rows:
-            if r.cluster_id is None:
-                n_del += int(r.n)
-                continue
-            n_new += int(r.n)
-            if (
-                self.ivf._radii is not None
-                and r.radius is not None
-                and float(r.radius) > self.ivf._radii[int(r.cluster_id)]
-            ):
-                self.ivf._radii[int(r.cluster_id)] = float(r.radius)
-        self.last_applied_upserts = n_new
-        ids = feed.select(id_col)
-        if n_new + n_del <= IVFIndex.BROADCAST_FEED_ROWS:
-            ids = F.broadcast(ids)
-        merged = self.encoded.join(ids, id_col, "left_anti").unionByName(
-            feed.filter(F.col("cluster_id").isNotNull()).select(*cols)
-        )
-        self.encoded = merged
-        self.ivf.indexed = merged
-        self.pq.encoded = merged
-        self.ivf._added_count += n_new
-        self.ivf._counts = None
-        self._tail_syncs += 1
-        self._tail_rows += n_new
-        base = max(1024, self.ivf._built_count + self.ivf._added_count)
-        if self._tail_syncs >= 8 or self._tail_rows >= 0.2 * base:
-            self.indexed = self.encoded.localCheckpoint()
-            self._tail_syncs = 0
-            self._tail_rows = 0
+        self.ivf._grow_radii(stats)
         return self.encoded
 
     def save(self, path: str) -> None:
         """Persist ONE physical dataset partitioned by cluster_id (probe =
         partition pruning) carrying codes + error + full vectors, plus the
-        driver-scale state of both layers. Staged atomic-swap
+        driver-scale state of both layers: the IVF sidecars
+        (`save_sidecars`) and the PQ codebooks. Staged atomic-swap
         (staged_index_save): save-over-own-load-path safe, crash-safe."""
-        assert self.encoded is not None
+        assert self.encoded is not None and self.pq.codebooks is not None
         spark = self.encoded.sparkSession
-        radii, counts = self.ivf.cluster_stats()
-
-        def write_into(stage: str) -> None:
-            (
-                self.encoded.write.mode("overwrite")
-                .partitionBy("cluster_id")
-                .parquet(f"{stage}/encoded")
-            )
-            cent_rows = [
-                (i, [float(x) for x in c])
-                for i, c in enumerate(self.ivf.centroids)
-            ]
-            local_rows_df(spark, 
-                cent_rows, "cluster_id int, centroid array<double>"
-            ).write.mode("overwrite").parquet(f"{stage}/centroids")
-            local_rows_df(spark, 
-                [
-                    (i, float(radii[i]), int(counts[i]))
-                    for i in range(len(radii))
-                ],
-                "cluster_id int, radius double, n long",
-            ).write.mode("overwrite").parquet(f"{stage}/cluster_stats")
-            m, k_sub, sub = self.pq.codebooks.shape
-            local_rows_df(spark, 
-                [
-                    (b, j, [float(x) for x in self.pq.codebooks[b, j]])
-                    for b in range(m)
-                    for j in range(k_sub)
-                ],
-                "b int, j int, centroid array<double>",
-            ).write.mode("overwrite").parquet(f"{stage}/codebooks")
-            # drift counters + build-time vector column (the IVFIndex meta
-            # contract): without them a reloaded composed index silently
-            # disables is_rebuild_required() and defaults maintenance to
-            # the ctor 'embedding' column
-            local_rows_df(spark, 
-                [(
-                    int(self.ivf._built_count),
-                    int(self.ivf._added_count),
-                    self.ivf._vec_col,
-                )],
-                "built_count long, added_count long, vec_col string",
-            ).write.mode("overwrite").parquet(f"{stage}/meta")
-            if self._recall_curve:
-                local_rows_df(spark, 
-                    [
-                        (int(p), float(r))
-                        for p, r in sorted(self._recall_curve.items())
-                    ],
-                    "nprobe int, recall double",
-                ).write.mode("overwrite").parquet(f"{stage}/recall_curve")
-
-        staged_index_save(path, write_into)
-        self.encoded = spark.read.parquet(f"{path}/encoded")
-        self.ivf.indexed = self.encoded
+        m, k_sub, _ = self.pq.codebooks.shape
+        books = local_rows_df(
+            spark,
+            [
+                (b, j, [float(x) for x in self.pq.codebooks[b, j]])
+                for b in range(m)
+                for j in range(k_sub)
+            ],
+            "b int, j int, centroid array<double>",
+        )
+        self.ivf._save(
+            path, "encoded", self._recall_curve,
+            lambda stage: books.write.mode("overwrite").parquet(
+                f"{stage}/codebooks"
+            ),
+        )
+        self.indexed = self.ivf.indexed
 
     @classmethod
     def load(cls, spark, path: str) -> "IVFPQIndex":
         recover_index_path(path)
-        cents = (
-            spark.read.parquet(f"{path}/centroids").orderBy("cluster_id").collect()
-        )
-        idx = cls(n_clusters=len(cents))
-        idx.ivf.centroids = np.array([r.centroid for r in cents])
-        idx.encoded = spark.read.parquet(f"{path}/encoded")
-        idx.ivf.indexed = idx.encoded
-        srows = spark.read.parquet(f"{path}/cluster_stats").collect()
-        radii = np.zeros(len(cents))
-        counts = np.zeros(len(cents), dtype=np.int64)
-        for r in srows:
-            radii[int(r.cluster_id)] = float(r.radius)
-            counts[int(r.cluster_id)] = int(r.n)
-        idx.ivf._radii, idx.ivf._counts = radii, counts
+        idx = cls()
+        idx.indexed = spark.read.parquet(f"{path}/encoded")
+        idx._recall_curve = load_sidecars(spark, path, ivf=idx.ivf)[1]
         crows = spark.read.parquet(f"{path}/codebooks").collect()
         m = max(r.b for r in crows) + 1
         k_sub = max(r.j for r in crows) + 1
@@ -1694,24 +1591,6 @@ class IVFPQIndex:
         for r in crows:
             books[r.b, r.j] = r.centroid
         idx.pq.codebooks = books
-        idx.pq.encoded = idx.encoded
-        try:
-            meta = spark.read.parquet(f"{path}/meta").head()
-            idx.ivf._built_count = int(meta.built_count)
-            idx.ivf._added_count = int(meta.added_count)
-            if meta.vec_col:
-                idx.ivf._vec_col = str(meta.vec_col)
-        except Exception:  # noqa: BLE001 — pre-meta layout: counts from stats
-            idx.ivf._built_count = int(counts.sum())
-            idx.ivf._added_count = 0
-        try:
-            rrows = spark.read.parquet(f"{path}/recall_curve").collect()
-            if rrows:
-                idx._recall_curve = {
-                    int(r.nprobe): float(r.recall) for r in rrows
-                }
-        except Exception:  # noqa: BLE001 — curve never measured/saved
-            pass
         return idx
 
     def search(
@@ -1719,7 +1598,7 @@ class IVFPQIndex:
         qvec,
         k: int,
         nprobe: int = 4,
-        vec_col: str = "embedding",
+        vec_col: str | None = None,
         id_col: str = "vec_id",
         metric: str = "l2",
     ) -> DataFrame:
@@ -1732,12 +1611,7 @@ class IVFPQIndex:
         (and `measure_recall_curve`/`nprobe_for_recall` calibration) as
         the plain IVF family, so a store's `mode="approx"` +
         `target_recall` serving works against either."""
-        assert self.encoded is not None
-        probes = self.ivf._probe_clusters(qvec, nprobe)
-        cand = self.encoded.filter(F.col("cluster_id").isin(probes))
-        return knn(
-            cand, qvec, k, vec_col=vec_col, id_col=id_col, metric=metric
-        )
+        return self.ivf.search(qvec, k, nprobe, vec_col, id_col, metric)
 
     def measure_recall_curve(
         self,
@@ -1768,7 +1642,7 @@ class IVFPQIndex:
         self,
         qvec,
         k: int,
-        vec_col: str = "embedding",
+        vec_col: str | None = None,
         id_col: str = "vec_id",
         pre_filter=None,
     ) -> DataFrame:
@@ -1782,6 +1656,7 @@ class IVFPQIndex:
         `IVFIndex.search_exact` rule — unfiltered counts could over-prune)
         and both the code scan and the PQ tau run over matching rows only,
         so every bound certifies the kth MATCHING neighbour."""
+        vec_col = vec_col or self.ivf._vec_col
         radii, counts = self.ivf.cluster_stats(vec_col)
         if pre_filter is not None:
             counts = self.ivf._filtered_counts(pre_filter)
@@ -1802,7 +1677,7 @@ class IVFPQIndex:
         k: int,
         query_vec: str = "embedding",
         query_id: str = "query_id",
-        vec_col: str = "embedding",
+        vec_col: str | None = None,
         id_col: str = "vec_id",
         pre_filter=None,
         score_decimals: int = 4,
@@ -1830,6 +1705,7 @@ class IVFPQIndex:
 
         assert self.encoded is not None and self.pq.codebooks is not None
         spark = self.encoded.sparkSession
+        vec_col = vec_col or self.ivf._vec_col
         radii, counts = self.ivf.cluster_stats(vec_col)
         if pre_filter is not None:
             counts = self.ivf._filtered_counts(pre_filter)
@@ -1937,7 +1813,7 @@ class IVFPQIndex:
         nprobe: int = 4,
         query_vec: str = "embedding",
         query_id: str = "query_id",
-        vec_col: str = "embedding",
+        vec_col: str | None = None,
         id_col: str = "vec_id",
         pre_filter=None,
         score_decimals: int = 4,
@@ -1949,43 +1825,9 @@ class IVFPQIndex:
         as `search`: approximation lives only in which clusters are
         probed, so the calibration curve prices it and target-recall
         batch serving works against the PQ family too)."""
-        from mlvectordb_spark.functions.vector import metric_expr
-
-        assert self.encoded is not None
-        spark = self.encoded.sparkSession
-        qrows = queries.select(query_id, query_vec).collect()
-        pairs = [
-            (r[query_id], int(c))
-            for r in qrows
-            for c in self.ivf._probe_clusters(r[query_vec], nprobe)
-        ]
-        probe_df = local_rows_df(spark, 
-            pairs, f"{query_id} long, cluster_id int"
-        )
-        cand = self.encoded.filter(
-            F.col("cluster_id").isin(sorted({c for _, c in pairs}))
-        )
-        if pre_filter is not None:
-            cand = cand.filter(pre_filter)
-        qv = queries.select(F.col(query_id), F.col(query_vec).alias("__qvec"))
-        scored = (
-            cand.join(F.broadcast(probe_df), "cluster_id")
-            .join(F.broadcast(qv), query_id)
-            .select(
-                F.col(query_id),
-                F.col(id_col),
-                F.round(
-                    metric_expr(F.col(vec_col), F.col("__qvec"), "l2"),
-                    score_decimals,
-                ).alias("score"),
-            )
-        )
-        return per_key_topk(
-            scored,
-            query_id,
-            k,
-            [F.col("score").asc(), F.col(id_col).asc()],
-            salt_on=id_col,
+        return self.ivf.knn_join(
+            queries, k, nprobe, query_vec, query_id,
+            vec_col or self.ivf._vec_col, id_col, pre_filter, score_decimals,
         )
 
 
@@ -2001,40 +1843,35 @@ def resync_index_from_snapshot(
     normalization).
 
     Expressed as one synthetic CDC feed through the index's own
-    `apply_changes` — the same maintenance kernel serves catch-up and
-    incremental, for any family that speaks the feed (IVF, IVF+PQ, LSH):
-    every live row as an upsert (retire-and-reassign) plus a delete for
-    every indexed id the snapshot no longer holds. One snapshot scan +
-    one anti-join of the index's id column; no refit. Afterwards the
-    drift counters restart at the snapshot size — a resync is a fresh
-    baseline, not drift (without the reset, absorbing the snapshot as
-    adds trips is_rebuild_required() permanently on every floor-forced
-    resync)."""
-    vec_type = {f.name: f.dataType for f in index.indexed.schema.fields}[
-        vec_col
-    ]
-    wv = int(write_version)
-    stale = (
-        index.indexed.select(id_col)
-        .join(snap.select(id_col), id_col, "left_anti")
-        .select(
-            F.col(id_col),
-            F.lit(None).cast(vec_type).alias(vec_col),
-            F.lit("delete").alias("change_type"),
-            F.lit(wv).cast("long").alias("write_version"),
-        )
+    `apply_changes` — the same `apply_cdc` kernel serves catch-up and
+    incremental for every family (IVFIndex, IVFPQIndex, LSHIndex,
+    GraphANNIndex): every live row as an upsert (retire-and-reassign)
+    plus a delete for every maintained id (graph: pending tail included)
+    the snapshot no longer holds. One snapshot scan + one anti-join of
+    the index's id column; no refit. Afterwards the drift counters restart
+    at the snapshot size — a resync is a fresh baseline, not drift
+    (without the reset, absorbing the snapshot as adds trips
+    is_rebuild_required() permanently on every floor-forced resync)."""
+    held = index.indexed.select(id_col)
+    if getattr(index, "pending", None) is not None:
+        held = held.unionByName(index.pending.select(id_col))
+    stale = held.join(snap.select(id_col), id_col, "left_anti").select(
+        id_col,
+        F.lit("delete").alias("change_type"),
+        F.lit(int(write_version)).cast("long").alias("write_version"),
     )
-    index.apply_changes(snap.unionByName(stale), vec_col=vec_col, id_col=id_col)
-    note = getattr(index, "note_full_resync", None)
-    if note is not None:
+    index.apply_changes(
+        snap.unionByName(stale, allowMissingColumns=True),
+        vec_col=vec_col,
+        id_col=id_col,
+    )
+    if hasattr(index, "note_full_resync"):
         # apply_changes counted the snapshot's upserts already — reuse it
-        n_live = getattr(index, "last_applied_upserts", None)
-        note(n_live if n_live is not None else snap.count())
+        index.note_full_resync(index.last_applied_upserts)
     # a full resync is also the natural stats-refresh point: grow-only
     # radii never shrink, so restore tightness while the corpus is in hand
-    refresh = getattr(index, "refresh_stats", None)
-    if refresh is not None:
-        refresh(vec_col)
+    if hasattr(index, "refresh_stats"):
+        index.refresh_stats(vec_col)
 
 
 class NamespaceIndexFamily:
@@ -2048,7 +1885,8 @@ class NamespaceIndexFamily:
     graph metadata.
 
     Works with any member family that speaks the build/apply_changes/
-    search_exact protocol (IVFIndex, IVFPQIndex, LSHIndex)."""
+    search_exact protocol (IVFIndex, IVFPQIndex, LSHIndex,
+    GraphANNIndex)."""
 
     def __init__(self, factory=None) -> None:
         self.factory = factory if factory is not None else (lambda: IVFIndex())
@@ -2097,28 +1935,20 @@ class NamespaceIndexFamily:
         isolation of maintenance, unlike the reference's rebuild which
         drops every other namespace's index (the documented
         query_processor.py:58-61 bug we do not replicate)."""
-        from pyspark.sql.window import Window as _W
-
         for ns in [r[0] for r in changes.select(ns_col).distinct().collect()]:
             sub = changes.filter(F.col(ns_col) == ns).drop(ns_col)
             idx = self.members.get(ns)
             if idx is None:
                 idx = self.factory()
                 # a brand-new member builds from the feed's LIVE state:
-                # latest event per id wins (same collapse apply_changes
-                # performs), and ids whose latest event is a delete never
-                # enter — a feed can legitimately carry
-                # upsert(x,v1) → upsert(x,v2) → delete(y)
-                w = _W.partitionBy(id_col).orderBy(
-                    F.col("write_version").desc()
-                )
+                # latest event per id wins (the apply_cdc collapse), and
+                # ids whose latest event is a delete never enter — a feed
+                # can legitimately carry upsert(x,v1) → upsert(x,v2) →
+                # delete(y)
                 live = (
-                    sub.withColumn("__rn", F.row_number().over(w))
-                    .filter(
-                        (F.col("__rn") == 1)
-                        & (F.col("change_type") == "upsert")
-                    )
-                    .drop("__rn", "change_type", "write_version")
+                    latest_events(sub, id_col)
+                    .filter(F.col("change_type") == "upsert")
+                    .drop("change_type", "write_version")
                 )
                 if not live.limit(1).count():
                     # every id's latest event is a delete: nothing live to
@@ -2155,7 +1985,8 @@ class NamespaceIndexFamily:
         README.md:239-241, with the namespace as the unit of isolation):
         each member saves under `<path>/<ns-quoted>/` via its own save()
         (IVF: cluster-partitioned parquet + centroids + drift counters +
-        pruning bounds; LSH: model + materialized buckets), plus a tiny
+        pruning bounds; LSH: model + materialized buckets + meta; graph:
+        block-partitioned graph + pending tail), plus a tiny
         manifest mapping namespaces to member class names."""
         import hashlib as _hashlib
         import json as _json

@@ -69,7 +69,12 @@ from pyspark.sql import types as T
 from mlvectordb_spark.functions.localdf import local_rows_df
 
 from mlvectordb_spark.functions.vector import metric_ascending, metric_expr
-from mlvectordb_spark.operators.ann import IVFIndex, per_key_topk
+from mlvectordb_spark.operators.ann import (
+    IVFIndex,
+    PendingTail,
+    apply_cdc,
+    per_key_topk,
+)
 from mlvectordb_spark.operators.knn import knn
 
 _SCORE_DECIMALS = 4
@@ -611,6 +616,7 @@ class GraphANNIndex:
         # add() batches whose drift contribution hasn't been counted yet
         # (settled in one job when the ratio is consulted — see add())
         self._uncounted_adds: DataFrame | None = None
+        self._tail = PendingTail()
         # measured ef → recall@k curve (measure_recall_curve): driver-side
         # scalars persisted by save(), so a reloaded serving index honors
         # a recall target without re-measuring — the graph's dial is ef
@@ -646,6 +652,7 @@ class GraphANNIndex:
         )
         self.indexed = self._graph_stage(assigned)
         self.pending = None
+        self._tail = PendingTail()
         self._built_count = df.count()
         self._added_count = 0
         self._uncounted_adds = None
@@ -1204,10 +1211,10 @@ class GraphANNIndex:
         """W8 incremental add: new vectors land in the flat pending tail —
         visible to the NEXT search immediately, at FULL recall (the tail
         is scanned exactly), with zero graph surgery. They count toward
-        the W11 drift trigger — LAZILY: no count job runs here (the r8
-        verdict's job-count trim); uncounted batches accumulate as a plan
-        and settle in one job the first time the drift ratio is actually
-        consulted (`is_rebuild_required` / `save`)."""
+        the W11 drift trigger — LAZILY: no count job runs here;
+        uncounted batches accumulate as a plan and settle in one job the
+        first time the drift ratio is actually consulted
+        (`is_rebuild_required` / `save`)."""
         assert self.indexed is not None, "build() first"
         cols = self._data_cols or df_new.columns
         batch = df_new.select(*cols)
@@ -1227,58 +1234,28 @@ class GraphANNIndex:
         vec_col: str | None = None,
         id_col: str | None = None,
     ) -> DataFrame:
-        """CDC maintenance (`VectorStore.changes_since` shape): latest
-        event per id wins; changed/deleted ids anti-join out of BOTH
-        segments (a removed graph node's dangling edges are skipped by id
-        at traversal time); upserts append to the pending tail. Upserts
-        AND deletes count toward drift — deletes also erode graph
-        navigability, exactly the reference's deleted/total counter
-        (index.py:85-89)."""
-        from pyspark.sql.window import Window as _W
-
+        """CDC maintenance through `apply_cdc`: changed/deleted ids retire
+        from BOTH segments (a removed node's dangling edges are skipped by
+        id at traversal time), upserts append to the pending tail as-is,
+        and both lineages collapse together on the kernel's PendingTail."""
         icol = id_col or self._id_col
         assert self.indexed is not None, "build() first"
-        w = _W.partitionBy(icol).orderBy(F.col("write_version").desc())
-        # LAZY checkpoint of the bounded deduped feed, materialized by the
-        # counts job just below (no extra job): the pending tail and the
-        # retire anti-joins must not lazily reference the store's parquet/
-        # tombstone files — the store sync re-checkpoints only `indexed`,
-        # so an un-checkpointed feed inside `pending` would dangle once
-        # compaction rewrites those files (r13 audit of the graph family).
-        latest = (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        ).localCheckpoint(eager=False)
-        touched = latest.select(icol)
-        self.indexed = self.indexed.join(touched, icol, "left_anti")
-        if self.pending is not None:
-            self.pending = self.pending.join(touched, icol, "left_anti")
-        ups = latest.filter(F.col("change_type") == "upsert").drop(
-            "change_type", "write_version"
+        apply_cdc(
+            self,
+            changes,
+            icol,
+            lambda ups: ups.select(*(self._data_cols or ups.columns)),
+            self._count_drift,
+            frames=("indexed", "pending"),
         )
-        cols = self._data_cols or ups.columns
-        ups = ups.select(*cols)
-        # ONE count job for the whole feed (total drives drift, upserts
-        # drive the resync baseline) instead of the two separate counts
-        # the r8 verdict flagged on the serving maintenance path
-        counts = latest.agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.count(
-                F.when(F.col("change_type") == "upsert", F.lit(1))
-            ).alias("n_up"),
-        ).head()
-        n_total, n_up = int(counts.n_total), int(counts.n_up)
-        if n_up:
-            self.pending = (
-                ups if self.pending is None
-                else self.pending.unionByName(ups)
-            )
-        # consumed by resync_index_from_snapshot to size the fresh drift
-        # baseline without re-counting the snapshot (IVF protocol parity)
-        self.last_applied_upserts = n_up
-        self._added_count += n_total
         return self.indexed
+
+    def _count_drift(self, n_up: int, n_del: int) -> int:
+        """apply_cdc drift rule: upserts AND deletes count — deletes also
+        erode graph navigability, exactly the reference's deleted/total
+        counter (index.py:85-89). Returns the index size."""
+        self._added_count += n_up + n_del
+        return self._built_count + self._added_count
 
     def _settle_drift(self) -> None:
         """Materialize the lazily-accumulated add() drift in ONE count job
@@ -1304,6 +1281,9 @@ class GraphANNIndex:
         brute-force scans behind an index that claims zero drift."""
         if self.pending is not None:
             self.rebuild()
+            # the rebuilt graph is this sync's only copy of the corpus in
+            # graph form: materialize it once instead of per search
+            self.indexed = self.indexed.localCheckpoint()
         self._built_count = max(1, int(n_live))
         self._added_count = 0
         self._uncounted_adds = None

@@ -1493,16 +1493,17 @@ class VectorStore:
 
         The attached index's `.indexed` plan must NOT lazily reference the
         store's own parquet files (compaction rewrites them): attach a
-        SAVED/loaded index or a checkpointed one. `build_index` and every
-        `sync_indexes` cycle checkpoint automatically; only a hand-built
-        index derived from `store.df()` needs the caller's care.
+        SAVED/loaded index or a checkpointed one. `build_index` checkpoints
+        automatically, and every family's `apply_changes` checkpoints the
+        feed it absorbs; only a hand-built index derived from `store.df()`
+        needs the caller's care.
 
         `as_of_version` is the store version the supplied index actually
         reflects (default: the current version — right when the index was
         just built from current state). Attaching an index built from an
         OLDER snapshot with the honest version makes auto-mode detect the
         gap (and sync_indexes close it via the CDC feed) instead of
-        silently serving the stale index as fresh (round-6 ADVICE)."""
+        silently serving the stale index as fresh."""
         if space not in ("l2", "cosine"):
             raise ValueError(f"unsupported index space {space!r}")
         cur = self.current_version()
@@ -1573,8 +1574,8 @@ class VectorStore:
         idx.build(slice_df, vec_col="values", id_col="id")
         # materialize: the built plan lazily scans the store's parquet
         # files, which the next compaction physically deletes — a served
-        # index must not reference store files (the streaming ingest's
-        # per-batch checkpoint, applied at build and every sync)
+        # index must not reference store files (syncs keep it detached:
+        # apply_changes checkpoints every feed it absorbs)
         idx.indexed = idx.indexed.localCheckpoint()
         self.attach_index(
             namespace, idx, vec_col="values", id_col="id", space=space
@@ -1620,10 +1621,9 @@ class VectorStore:
         ):
             # every version since the sync was written BY THIS OBJECT
             # and none touched this namespace: advance the bookmark
-            # without paying an empty-feed apply + checkpoint. The
-            # tracker alone is NOT enough — it is a lower bound, blind
-            # to other writers — so any unaccounted version falls
-            # through to the real feed check below (round-6 ADVICE).
+            # without paying an empty-feed apply. The tracker alone is
+            # NOT enough — it is a lower bound, blind to other writers —
+            # so any unaccounted version falls through to the feed check.
             self._serving_synced_at[ns] = v1
             return
         try:
@@ -1646,30 +1646,18 @@ class VectorStore:
             )
             if not (last_write is not None and last_write > v0):
                 # emptiness probe ONLY when this object has no record of
-                # writing the namespace since the bookmark: when it does
-                # (last_write > v0 — the steady serving cycle), the feed
-                # is known non-empty and the probe job is pure overhead
-                # (guide §1.2). Skipping is safe even if the tracked
-                # write carried zero rows — apply_changes on an empty
-                # feed is a bounded no-op.
+                # writing the namespace since the bookmark: in the steady
+                # serving cycle (last_write > v0) the feed is known
+                # non-empty, and a zero-row tracked write still makes
+                # apply_changes a bounded no-op
                 if feed.limit(1).count() == 0:
-                    # namespace-partition-pruned metadata-scale read: the
-                    # writes since v0 all went elsewhere — bookmark moves,
-                    # no apply/checkpoint re-materialization
+                    # every write since v0 went elsewhere: bookmark moves
                     self._serving_synced_at[ns] = v1
                     return
             index.apply_changes(feed, vec_col=vec_col, id_col=id_col)
         except ValueError:
             self._resync_index(ns, index, vec_col, id_col, space)
             v1 = self.current_version()
-        if not getattr(index, "manages_materialization", False):
-            # cut the union/anti-join lineage AND detach the plan from the
-            # store's parquet files before compaction can delete them.
-            # Indexes that manage their own pending tail (IVF) already
-            # checkpointed the bounded pieces inside apply_changes — the
-            # blanket re-checkpoint here was an O(index) materialization
-            # per bounded sync batch.
-            index.indexed = index.indexed.localCheckpoint()
         self._serving_synced_at[ns] = v1
 
     def _resync_index(

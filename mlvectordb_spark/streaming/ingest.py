@@ -131,7 +131,7 @@ def start_indexed_ingest(
     store WITH a continuously-fresh serving index: each micro-batch
     applies its upserts/deletes through the store's versioned write paths,
     then rolls the index forward from the store's OWN CDC feed
-    (`changes_since` → `IVFIndex.apply_changes`) — the index never reads
+    (`changes_since` → `index.apply_changes`) — the index never reads
     the mutation stream directly, so any writer (REST, batch, other
     streams) funnels through the same sync and the index converges on the
     store's truth.
@@ -139,9 +139,11 @@ def start_indexed_ingest(
     Replay safety: a replayed batch re-appends the same ids at a higher
     write_version (latest-wins collapses them) and re-applies a feed that
     retires-then-re-adds the same ids in the index — both idempotent in
-    the read view. The index's union/anti-join lineage is truncated with a
-    localCheckpoint per batch, so a long-running stream holds a bounded
-    plan (the `operators/components.py` iteration lesson).
+    the read view. Every family's `apply_changes` (`ann.apply_cdc`)
+    checkpoints the feed it absorbs and bounds its lineage, so a
+    long-running stream holds a bounded plan at O(feed) cost per batch;
+    as with `VectorStore.attach_index`, the index must not lazily scan
+    the store's own files.
 
     Intra-batch order: the stream's `seq` field decides — only the LATEST
     op per (id, namespace) applies, so delete(k) then upsert(k) in one
@@ -196,7 +198,6 @@ def start_indexed_ingest(
                 # floor raced past v0 between the check and the read
                 resync_index(store, index, vec_col=vec_col, id_col=id_col)
         bookmark["v"] = v1
-        index.indexed = index.indexed.localCheckpoint()
 
     return (
         stream.writeStream.foreachBatch(write_batch)
@@ -223,7 +224,6 @@ def start_store_ingest(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_mutation_batch(store, batch_df)
-        # sync_indexes checkpoints each member's lineage internally
         store.sync_indexes()
 
     return (

@@ -736,29 +736,48 @@ def test_namespace_family_save_load_roundtrip(spark, tmp_path):
     assert not fam2.member("ns/a").is_rebuild_required()
 
 
-def test_ivf_load_restores_vec_col(spark, tmp_path):
-    """Round-6 ADVICE: an index built over a non-default vector column
-    (e.g. the store's 'values') must restore that column name on load —
-    otherwise refresh_stats()/apply_changes()/save() default to the ctor
-    'embedding' and crash on the reloaded layout."""
+@pytest.mark.parametrize("family", ["ivf", "ivfpq", "lsh"])
+def test_load_restores_vec_col(spark, tmp_path, family):
+    """An index built over a non-default vector column (e.g. the store's
+    'values') must keep that column name through save/load — otherwise
+    the maintenance and search paths default to the ctor 'embedding' and
+    crash on the reloaded layout. LSH must also keep serving search()
+    after an in-place save() (which swaps in the bucket-materialized
+    layout) and after load()."""
+    from mlvectordb_spark.operators.ann import IVFPQIndex
+
     df = spark.createDataFrame(
-        [(f"k{i}", [float(i), float(i % 3)]) for i in range(40)],
+        [(f"k{i}", [float(i), float(i % 3), float(i % 5), 1.0]) for i in range(40)],
         "id string, values array<float>",
     )
-    idx = IVFIndex(n_clusters=4, seed=5)
+    idx = {
+        "ivf": lambda: IVFIndex(n_clusters=4, seed=5),
+        "ivfpq": lambda: IVFPQIndex(n_clusters=4, m=2, k_sub=4, seed=5),
+        "lsh": lambda: LSHIndex(bucket_length=2.0, num_hash_tables=2, seed=5),
+    }[family]()
     idx.build(df, vec_col="values", id_col="id")
-    idx.save(str(tmp_path / "ivf_vc"))
-    loaded = IVFIndex.load(spark, str(tmp_path / "ivf_vc"))
-    assert loaded._vec_col == "values"
-    # the paths that default to self._vec_col must work on the reload
-    loaded.refresh_stats()
+    path = str(tmp_path / family)
+    idx.save(path)
+    q = [3.0, 0.0, 3.0, 1.0]
+    if family == "lsh":
+        assert idx.search(q, 3, id_col="id").count() > 0
+        loaded = LSHIndex.load(spark, path, vec_col="values")
+        assert loaded._vec_col == "values"
+    else:
+        loaded = type(idx).load(spark, path)
+        assert getattr(loaded, "ivf", loaded)._vec_col == "values"
+    if family == "ivf":
+        loaded.refresh_stats()
     feed = spark.createDataFrame(
-        [("k100", [100.0, 1.0], "upsert", 1)],
+        [("k100", [100.0, 1.0, 0.0, 1.0], "upsert", 1)],
         "id string, values array<float>, change_type string, "
         "write_version long",
     )
     loaded.apply_changes(feed, id_col="id")  # vec_col defaulted
     assert loaded.indexed.filter(F.col("id") == "k100").count() == 1
+    if family == "lsh":
+        assert loaded.search_exact(q, 3, id_col="id").count() == 3
+        assert loaded.search(q, 3, id_col="id").count() > 0
 
 
 def test_ivfpq_save_load_keeps_drift_and_vec_col(spark, emb, tmp_path):

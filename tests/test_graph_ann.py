@@ -163,6 +163,44 @@ def test_apply_changes_delete_and_upsert(spark, emb, qvec):
     assert got[0] == QVID
 
 
+def test_pending_lineage_stays_bounded_over_syncs(spark):
+    """Both maintained frames collapse on the shared PendingTail policy:
+    after 10 small syncs neither `pending` nor `indexed` carries more than
+    8 retire anti-joins (one per sync since the last collapse), and the
+    maintained index still answers exactly."""
+    import math
+
+    def vec(i):
+        return [math.cos(0.3 * i), math.sin(0.3 * i), float(i % 4)]
+
+    base = spark.createDataFrame(
+        [(i, vec(i)) for i in range(24)], "vec_id long, embedding array<float>"
+    )
+    idx = GraphANNIndex(n_blocks=1, m=4, ef_construction=16)
+    idx.build(base)
+    idx.indexed = idx.indexed.localCheckpoint()
+    live = {i: vec(i) for i in range(24)}
+    for s in range(10):
+        events = [(100 + s, vec(100 + s), "upsert"), (s, None, "delete")]
+        live[100 + s] = vec(100 + s)
+        live.pop(s)
+        idx.apply_changes(
+            spark.createDataFrame(
+                [(i, v, t, s + 1) for i, v, t in events],
+                "vec_id long, embedding array<float>, change_type string, "
+                "write_version long",
+            )
+        )
+    for frame in (idx.pending, idx.indexed):
+        plan = frame._jdf.queryExecution().analyzed().toString()
+        assert plan.count("LeftAnti") <= 8, plan
+    q = vec(7)
+    want = sorted(
+        live, key=lambda i: sum((a - b) ** 2 for a, b in zip(live[i], q))
+    )[:5]
+    assert [r.vec_id for r in idx.search_exact(q, 5).collect()] == want
+
+
 def test_rebuild_trigger_and_fold(spark, emb):
     idx = GraphANNIndex(n_blocks=2, m=4, ef_construction=32)
     idx.build(emb)

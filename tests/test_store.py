@@ -769,49 +769,142 @@ def test_indexed_cosine_space_matches_brute_force(spark, tmp_path):
     assert all(h["id"] != "c7" for h in got2)
 
 
-def test_any_index_family_serves_through_store(spark, tmp_path):
-    """The attach protocol is family-agnostic: IVF+PQ and LSH members both
-    serve find_similar(mode="indexed") exactly (every family exposes
-    build/apply_changes/search_exact/.indexed)."""
+_FAMILIES = ("ivf", "ivfpq", "lsh", "graph")
+
+
+def _family_vec(i):
     import math
 
-    from pyspark.sql import functions as F
+    return [
+        math.cos(0.21 * i), math.sin(0.21 * i),
+        math.cos(0.11 * i + 1.0), float(i % 6),
+    ]
 
-    from mlvectordb_spark.operators.ann import IVFPQIndex, LSHIndex
-    from mlvectordb_spark.operators.knn import knn
 
-    def vec(i):
-        return [
-            math.cos(0.21 * i), math.sin(0.21 * i),
-            math.cos(0.11 * i + 1.0), float(i % 6),
-        ]
+@pytest.fixture(scope="module")
+def family_store(spark, tmp_path_factory):
+    """One small store with one namespace per index family, each index
+    attached through build_index. Step 1: ONE non-folding sync of a feed
+    that overwrites a few ids per namespace, under job groups: one for
+    the sync itself, and per family one for its apply_changes and one for
+    everything after it. Step 2: deletes, a second sync and a compaction
+    of every namespace. Yields (store, root, {family: (jobs inside its
+    apply_changes, jobs after it)}, jobs before any apply_changes)."""
+    from mlvectordb_spark.operators.ann import IVFIndex, IVFPQIndex, LSHIndex
+    from mlvectordb_spark.operators.graph_ann import GraphANNIndex
 
-    store = VectorStore(spark, str(tmp_path / "famserve"), rebuild_threshold=0.95)
+    factories = {
+        "ivf": lambda: IVFIndex(n_clusters=4, seed=2),
+        "ivfpq": lambda: IVFPQIndex(n_clusters=4, m=4, k_sub=8, seed=2),
+        "lsh": lambda: LSHIndex(bucket_length=0.7, num_hash_tables=3, seed=2),
+        "graph": lambda: GraphANNIndex(n_blocks=2, m=4, ef_construction=16),
+    }
+    root = str(tmp_path_factory.mktemp("families") / "store")
+    store = VectorStore(spark, root, rebuild_threshold=0.95)
+    rows = "id string, values array<float>, namespace string"
     store.upsert_df(
         spark.createDataFrame(
-            [(f"k{i}", vec(i), "default") for i in range(64)],
-            "id string, values array<float>, namespace string",
+            [(f"k{i}", _family_vec(i), ns) for ns in _FAMILIES for i in range(64)],
+            rows,
         )
     )
-    q = vec(9)
+    for ns in _FAMILIES:
+        store.build_index(ns, factory=factories[ns])
+    store.upsert_df(
+        spark.createDataFrame(
+            [
+                (f"k{i}", _family_vec(i + 200), ns)
+                for ns in _FAMILIES
+                for i in (9, 20, 31)
+            ],
+            rows,
+        )
+    )
+    sc = spark.sparkContext
+    outer = "family-sync"
 
-    def brute(k):
-        ns_df = store.df().select("id", "values")
-        return [
-            (r.id, round(r.score, 4))
-            for r in knn(
-                ns_df, q, k, vec_col="values", id_col="id", metric="l2"
-            ).collect()
-        ]
+    def grouped(ns, apply):
+        def grouped_apply(*args, **kwargs):
+            sc.setJobGroup(f"family-apply-{ns}", "apply_changes")
+            try:
+                return apply(*args, **kwargs)
+            finally:
+                sc.setJobGroup(f"family-after-{ns}", "after apply_changes")
 
-    want = brute(5)
-    for factory in (
-        lambda: IVFPQIndex(n_clusters=4, m=4, k_sub=8, seed=2),
-        lambda: LSHIndex(bucket_length=0.7, num_hash_tables=3, seed=2),
-    ):
-        store.build_index("default", factory=factory)
-        got = store.find_similar(q, 5, metric="l2", mode="indexed")
-        assert [(h["id"], round(h["score"], 4)) for h in got] == want, factory
+        return grouped_apply
+
+    for ns in _FAMILIES:
+        index = store.attached_index(ns)
+        index.apply_changes = grouped(ns, index.apply_changes)
+    sc.setJobGroup(outer, "sync_indexes")
+    try:
+        store.sync_indexes()
+    finally:
+        sc._jsc.clearJobGroup()
+        for ns in _FAMILIES:
+            del store.attached_index(ns).apply_changes
+    tracker = sc.statusTracker()
+    jobs = {
+        ns: tuple(
+            len(tracker.getJobIdsForGroup(f"family-{step}-{ns}"))
+            for step in ("apply", "after")
+        )
+        for ns in _FAMILIES
+    }
+    before = len(tracker.getJobIdsForGroup(outer))
+    store.delete_df(
+        spark.createDataFrame(
+            [(f"k{i}", ns) for ns in _FAMILIES for i in (8, 10, 40)],
+            "id string, namespace string",
+        )
+    )
+    store.sync_indexes()
+    for ns in _FAMILIES:
+        store.compact(ns)
+    yield store, root, jobs, before
+
+
+@pytest.mark.parametrize("family", _FAMILIES)
+def test_sync_job_budget(family_store, family):
+    """A non-folding sync costs O(feed) for every family: at most 3 Spark
+    jobs, all inside apply_changes (the feed collapse + the one stats
+    aggregate that materializes the feed checkpoint), and none after it —
+    no store-side whole-index materialization."""
+    _, _, jobs, before = family_store
+    inside, after = jobs[family]
+    assert inside <= 3, jobs
+    assert after == 0, jobs
+    assert before == 0, before
+
+
+@pytest.mark.parametrize("family", _FAMILIES)
+def test_any_index_family_serves_through_store(family_store, family):
+    """The attach protocol is family-agnostic, and the sync-then-compact
+    invariant holds for every family: after overwrites, deletes,
+    sync_indexes() and a compaction that rewrites the namespace's files
+    (the fixture), find_similar(mode="indexed") equals brute force over
+    the live rows (float32 values, squared l2 rounded to 4 decimals, ties
+    by id), and no maintained frame still scans a file under the store
+    root."""
+    store, root, _, _ = family_store
+    index = store.attached_index(family)
+    for frame in (index.indexed, getattr(index, "pending", None)):
+        if frame is not None:
+            assert not [f for f in frame.inputFiles() if root in f]
+    live = {f"k{i}": _family_vec(i) for i in range(64)}
+    live.update({f"k{i}": _family_vec(i + 200) for i in (9, 20, 31)})
+    for i in (8, 10, 40):
+        del live[f"k{i}"]
+    q = np.asarray(_family_vec(9))
+    scores = {
+        k: round(float(((np.asarray(v, np.float32) - q) ** 2).sum()), 4)
+        for k, v in live.items()
+    }
+    want = sorted(scores.items(), key=lambda kv: (kv[1], kv[0]))[:5]
+    got = store.find_similar(
+        list(q), 5, namespace=family, metric="l2", mode="indexed"
+    )
+    assert [(h["id"], round(h["score"], 4)) for h in got] == want
 
 
 def test_approx_mode_probes_subset(spark, tmp_path):
